@@ -644,19 +644,24 @@ def build_index(
         and _get_analyzer(cfg.analyzer).do_stem
         and not cfg.index.store_positions
     )
-    tokenize(
-        tok_input,
-        fields,
-        _impl,
-        analyzer_name=cfg.analyzer,
-        broadcast_stems=n_docs <= cfg.index.stem_broadcast_max_docs,
-        positions=cfg.index.store_positions,
-        n_docs_hint=n_docs,
-        apply_stems=not late_stem,
-    ).write.mode("overwrite").parquet(stage_path)
+    try:
+        tokenize(
+            tok_input,
+            fields,
+            _impl,
+            analyzer_name=cfg.analyzer,
+            broadcast_stems=n_docs <= cfg.index.stem_broadcast_max_docs,
+            positions=cfg.index.store_positions,
+            n_docs_hint=n_docs,
+            apply_stems=not late_stem,
+        ).write.mode("overwrite").parquet(stage_path)
+    finally:
+        if docids_fut is not None:
+            # joined on failure too: a raising tokenize must not leave
+            # the helper thread's docids write running past the build
+            _docids_pool.shutdown(wait=True)
     if docids_fut is not None:
         docids_fut.result()  # surfaces any docids-write failure here
-        _docids_pool.shutdown(wait=False)
     raw_tokens = spark.read.parquet(stage_path)
     _mark('tokenize -> stage parquet (+ overlapped docids write)')
 

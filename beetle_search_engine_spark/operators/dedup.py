@@ -320,6 +320,10 @@ def connected_components(
     diameter exactly max_iter converges rather than raising.
     """
     spark = pairs.sparkSession
+    # validated before the local fast path: a misspelled name must not
+    # succeed on small inputs and fail only once they outgrow the cap
+    if algorithm not in ("label", "star"):
+        raise ValueError(f"unknown algorithm {algorithm!r} (label | star)")
 
     # Driver-local fast path (round 7): the same adaptive pattern as
     # BM25Index.search's prefer_local — a SMALL pair set never needs a
@@ -410,8 +414,6 @@ def connected_components(
             pairs, a_col, b_col, id_out, comp_out, max_iter, _stage, staged_paths,
             checkpoint_dir,
         )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label | star)")
 
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))

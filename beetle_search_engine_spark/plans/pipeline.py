@@ -103,14 +103,13 @@ def search_and_rerank(
         # MultifieldParser (search_bm25.py:32-33) — mode='parse' is our
         # grammar analog (AndGroup default, explicit OR, quoted phrases);
         # a plain term query parses to exactly the conjunctive semantics.
-        # collect the tiny top-k once: probing emptiness lazily would
-        # re-execute the whole retrieval for every downstream action
-        rows = index.search(query, top_k, mode="parse").collect()
-        if not rows and or_fallback:
-            rows = index.search(query, top_k, mode="or").collect()
-        if not rows:
-            return spark.createDataFrame([], "doc_id string, score double, rank int")
-        cands = spark.createDataFrame(rows)
+        # search() hands back its top-k as a materialized LocalRelation,
+        # so probing it for emptiness re-runs no retrieval
+        cands = index.search(query, top_k, mode="parse")
+        if or_fallback and cands.isEmpty():
+            cands = index.search(query, top_k, mode="or")
+        if cands.isEmpty():
+            return index.empty_result()
     elif method in ("knn", "faiss"):  # "faiss" is the reference's name
         if embeddings is None or (query_vec_id is None and query_vec is None):
             raise ValueError(f"{method} method needs embeddings + a query vector")
@@ -125,7 +124,7 @@ def search_and_rerank(
 
         qterms = sql_tokenize(query)
         if not qterms:
-            return spark.createDataFrame([], "doc_id string, score double, rank int")
+            return index.empty_result()
         cands = with_rank(
             splade_like_topk(documents, qterms, top_k).select(
                 "doc_id", F.col("score").cast("double").alias("score")

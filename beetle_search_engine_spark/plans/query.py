@@ -6,12 +6,17 @@
       -> bucket-pruned, term-filtered scan of the posting parquet
          (partition pruning on bucket dirs + row-group pushdown on term)
       -> groupBy(chunk).applyInPandas(block-max WAND kernel)  [bounded heap k]
-      -> global TakeOrderedAndProject (score desc, docnum asc) limit k
-      -> broadcast join with the docids dimension for display ids
+      -> global TakeOrderedAndProject (score desc, docnum asc) limit k,
+         collected: the k winners on the driver
+      -> pruned docid collect: the k docnums pushed into the docids scan
+         as an IN filter (row-group skipping), ranked rows built on the
+         driver
+      -> result handed back as an Arrow LocalRelation (no Spark job to
+         collect it)
 
-Node boundaries appear exactly twice, as in the survey's plan: the term
-broadcast into the kernel closure and the final top-k merge.  The
-reference's equivalent path is search_bm25.py:27-39 (Whoosh searcher).
+The local path (prefer_local) replaces the scan and kernel jobs with a
+pyarrow read scored on the driver, so a search runs no Spark job at all.
+The reference's equivalent path is search_bm25.py:27-39 (Whoosh searcher).
 """
 
 from __future__ import annotations
@@ -20,14 +25,21 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from ..functions.analyzer import get_analyzer
 from ..functions.xxhash import pmod_bucket
 from ..operators.wand import make_wand_kernel
 from .parser import ParsedQuery, parse_query
 
-RESULT_SCHEMA = "doc_id string, score double, rank int"
-BATCH_RESULT_SCHEMA = "query_id string, " + RESULT_SCHEMA
+# StructTypes, not DDL strings: given a DDL string, the Arrow path of
+# _local_frame ignores it and takes the Arrow table's own schema
+RESULT_SCHEMA = StructType([
+    StructField("doc_id", StringType()),
+    StructField("score", DoubleType()),
+    StructField("rank", IntegerType()),
+])
+BATCH_RESULT_SCHEMA = StructType([StructField("query_id", StringType()), *RESULT_SCHEMA.fields])
 
 
 def read_index_metrics(index_dir: str) -> dict:
@@ -95,7 +107,74 @@ class BM25Index:
         return {t: pmod_bucket(t, n_buckets) for t in terms}
 
     def empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+        return self._local_frame([], RESULT_SCHEMA)
+
+    def _local_frame(self, rows: list[tuple], schema: StructType) -> DataFrame:
+        """Driver-held result rows -> a LocalRelation DataFrame.  An Arrow
+        table goes through ArrowConverters.toDataFrame, which inlines it
+        into the plan below spark.sql.execution.arrow.localRelationThreshold,
+        so collecting the result runs no Spark job (a Python list would go
+        through sc.parallelize: one Python-worker RDD job per collect just
+        to re-ship rows the driver already holds)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+        return self.spark.createDataFrame(table, schema)
+
+    def _ranked_frame(self, hits: list[tuple], schema: StructType, local: bool) -> DataFrame:
+        """Ranked ``(*key, docnum, score, rank)`` hits, in output order ->
+        the ``(*key, doc_id, score, rank)`` result frame (``key`` is the
+        query id of a batch).  The docnums resolve to display ids in one
+        pruned read of the docids dimension: pyarrow on the driver for
+        the local path, else one Spark collect with the docnums pushed
+        into the scan as an IN filter — the docids parquet is
+        docnum-sorted, so the filter skips whole row groups."""
+        docnums = sorted({int(h[-3]) for h in hits})
+        id_map = {}
+        if local and docnums:
+            try:
+                id_map = self._docids_arrow(docnums)
+            except Exception:  # e.g. non-local filesystem without pyarrow support
+                local = False
+        if not local and docnums:
+            id_map = dict(
+                self.docids.filter(F.col("docnum").isin(docnums))
+                .select("docnum", "doc_id").collect()
+            )
+        rows = [(*h[:-3], id_map[int(h[-3])], float(h[-2]), int(h[-1])) for h in hits]
+        return self._local_frame(rows, schema)
+
+    def _kernel(self, pq: ParsedQuery, top_k: int, df_override: dict | None):
+        return make_wand_kernel(
+            pq.terms, self.stats, top_k, pq.mode, df_override, pq.phrases,
+            fielded=pq.fielded, excluded=pq.excluded,
+            groups=pq.groups or None, excluded_phrases=pq.excluded_phrases or None,
+            deleted=self.deleted,
+            term_boosts=pq.boosts or None, maybe_terms=pq.maybe_terms or None,
+            filter_terms=pq.filter_terms or None, tree=pq.tree,
+            slop_phrases=pq.slop_phrases or None,
+            excluded_slop_phrases=pq.excluded_slop_phrases or None,
+        )
+
+    def _epoch_dfs(self, scan: DataFrame) -> dict | None:
+        """Multi-epoch index: true df = sum of per-epoch dfs, one tiny
+        metadata aggregation over the already-pruned scan (None for a
+        single-epoch index: the stored df is exact)."""
+        if len(self.stats.get("epochs", {"0": 0})) <= 1:
+            return None
+        rows = (
+            scan.groupBy("field", "term", "epoch")
+            .agg(F.first("df").alias("df"))
+            .groupBy("field", "term")
+            .agg(F.sum("df").alias("df"))
+            .collect()
+        )
+        return {(r["field"], r["term"]): int(r["df"]) for r in rows}
 
     def metrics(self) -> dict:
         """Build + storage-skew metrics from the group manifests (judge-
@@ -246,10 +325,7 @@ class BM25Index:
         # docnum tiebreak) is preserved verbatim; the 1.0-floor padding
         # sorts strictly below every match and is ordered by lowest
         # display id (the _search_every determinism rule) — no re-sort
-        return self.spark.createDataFrame(
-            [(d, s, i + 1) for i, (d, s) in enumerate(out)],
-            RESULT_SCHEMA,
-        )
+        return self._local_frame([(d, s, i + 1) for i, (d, s) in enumerate(out)], RESULT_SCHEMA)
 
     def search(
         self, query: str, top_k: int = 10, mode: str = "and", prefer_local: bool | None = None
@@ -260,11 +336,18 @@ class BM25Index:
         grammar (plans/parser.py: bare terms AND'd, explicit OR, quoted
         phrases) instead of treating it as a bag of words.
 
+        The result is a LocalRelation of at most ``top_k`` rows (the
+        match-all ``*`` query aside, a lazy plan over the docids
+        dimension): it is materialized by the time ``search`` returns,
+        and collecting it runs no Spark job.  The distributed path runs
+        the kernel and global top-k collect, then one pruned docid
+        collect.
+
         ``prefer_local`` short-circuits the distributed kernel when the
-        index is small: the bucket-pruned posting rows are collected and
-        scored on the driver with the same kernels (2 small jobs instead
-        of a shuffle pipeline — interactive latency).  Defaults to
-        n_docs <= 200k; results identical by construction."""
+        index is small: the bucket-pruned posting rows are read with
+        pyarrow and scored on the driver with the same kernels (no Spark
+        job at all instead of a shuffle pipeline — interactive latency).
+        Defaults to n_docs <= 200k; results identical by construction."""
         if mode == "parse":
             pq = parse_query(query, self.analyzer, fields=set(self.stats.get("fields", [])))
         else:
@@ -287,7 +370,6 @@ class BM25Index:
             raise ValueError(
                 "phrase query needs an index built with store_positions=True"
             )
-        terms, mode, phrases = pq.terms, pq.mode, pq.phrases
         # excluded (NOT) terms and negated-phrase terms ride the same
         # pruned scan: their postings are needed to drop matching docs,
         # but they never score
@@ -297,7 +379,7 @@ class BM25Index:
         # on the scan too: one scores without gating, the other gates
         # without scoring
         all_terms = list(dict.fromkeys(
-            [*terms, *pq.excluded, *ex_phrase_terms, *pq.maybe_terms, *pq.filter_terms]
+            [*pq.terms, *pq.excluded, *ex_phrase_terms, *pq.maybe_terms, *pq.filter_terms]
         ))
         buckets = self._buckets_for(all_terms)
         scan = self.postings.filter(
@@ -307,53 +389,13 @@ class BM25Index:
             prefer_local = self.stats["n_docs"] <= 200_000
         if prefer_local:
             return self._search_local(scan, all_terms, top_k, pq)
-        df_override = None
-        if len(self.stats.get("epochs", {"0": 0})) > 1:
-            # multi-epoch index: true df = sum of per-epoch dfs; one tiny
-            # metadata aggregation over the already-pruned scan
-            rows = (
-                scan.groupBy("field", "term", "epoch")
-                .agg(F.first("df").alias("df"))
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            df_override = {(r["field"], r["term"]): int(r["df"]) for r in rows}
-        kernel = make_wand_kernel(
-            terms, self.stats, top_k, mode, df_override, phrases,
-            fielded=pq.fielded, excluded=pq.excluded,
-            groups=pq.groups or None, excluded_phrases=pq.excluded_phrases or None,
-            deleted=self.deleted,
-            term_boosts=pq.boosts or None, maybe_terms=pq.maybe_terms or None,
-            filter_terms=pq.filter_terms or None, tree=pq.tree,
-            slop_phrases=pq.slop_phrases or None,
-            excluded_slop_phrases=pq.excluded_slop_phrases or None,
-        )
+        kernel = self._kernel(pq, top_k, self._epoch_dfs(scan))
         scored = scan.groupBy("chunk").applyInPandas(kernel, "docnum long, score double")
         top_rows = (
             scored.orderBy(F.desc("score"), F.asc("docnum")).limit(top_k).collect()
         )  # k rows on the driver — the global top-k merge
-        if not top_rows:
-            return self.empty_result()
-        # docid fetch with the k docnums pushed into the scan as an IN
-        # filter: a broadcast join alone cannot prune the docids
-        # dimension, so every query would pay a full scan of it at scale;
-        # the docids parquet is docnum-contiguous-sorted, so the pushed
-        # filter skips whole row groups.
-        ranked = self.spark.createDataFrame(
-            [
-                (int(r["docnum"]), float(r["score"]), i + 1)
-                for i, r in enumerate(top_rows)
-            ],
-            "docnum long, score double, rank int",
-        )
-        pruned = self.docids.filter(F.col("docnum").isin([int(r["docnum"]) for r in top_rows]))
-        return (
-            pruned.join(F.broadcast(ranked), "docnum", "inner")
-            .orderBy(F.asc("rank"))
-            .select("doc_id", "score", "rank")
-        )
-
+        hits = [(r["docnum"], r["score"], i + 1) for i, r in enumerate(top_rows)]
+        return self._ranked_frame(hits, RESULT_SCHEMA, local=False)
 
     def search_many(
         self,
@@ -421,9 +463,7 @@ class BM25Index:
             return df.orderBy("query_id", "rank") if every_pqs else df
 
         if not parsed:
-            return _with_every(self.spark.createDataFrame(
-                [], BATCH_RESULT_SCHEMA
-            ))
+            return _with_every(self._local_frame([], BATCH_RESULT_SCHEMA))
 
         def _q_terms(pq: ParsedQuery) -> list[str]:
             ex_ph = [t for ph in pq.excluded_phrases for t, _off in ph]
@@ -438,33 +478,9 @@ class BM25Index:
         scan = self.postings.filter(
             F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(all_terms)
         )
-        df_override = None
-        if len(self.stats.get("epochs", {"0": 0})) > 1:
-            rows = (
-                scan.groupBy("field", "term", "epoch")
-                .agg(F.first("df").alias("df"))
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            df_override = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+        df_override = self._epoch_dfs(scan)
         kernels = {
-            qid: (
-                make_wand_kernel(
-                    pq.terms, self.stats, top_k, pq.mode, df_override, pq.phrases,
-                    fielded=pq.fielded, excluded=pq.excluded,
-                    groups=pq.groups or None,
-                    excluded_phrases=pq.excluded_phrases or None,
-                    deleted=self.deleted,
-                    term_boosts=pq.boosts or None,
-                    maybe_terms=pq.maybe_terms or None,
-                    filter_terms=pq.filter_terms or None,
-                    tree=pq.tree,
-                    slop_phrases=pq.slop_phrases or None,
-                    excluded_slop_phrases=pq.excluded_slop_phrases or None,
-                ),
-                set(per_q_terms[qid]),
-            )
+            qid: (self._kernel(pq, top_k, df_override), set(per_q_terms[qid]))
             for qid, pq in parsed.items()
         }
 
@@ -501,59 +517,31 @@ class BM25Index:
             res = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
                 {"query_id": [], "docnum": [], "score": []}
             )
-            if len(res) == 0:
-                return _with_every(self.spark.createDataFrame(
-                    [], BATCH_RESULT_SCHEMA
-                ))
             res = (
                 res.sort_values(["query_id", "score", "docnum"], ascending=[True, False, True])
                 .groupby("query_id")
                 .head(top_k)
             )
             res["rank"] = res.groupby("query_id").cumcount() + 1
-            docnums = sorted({int(d) for d in res["docnum"]})
-            try:
-                id_map = self._docids_arrow(docnums)
-            except Exception:
-                id_rows = (
-                    self.docids.filter(F.col("docnum").isin(docnums))
-                    .select("docnum", "doc_id").collect()
-                )
-                id_map = {r["docnum"]: r["doc_id"] for r in id_rows}
-            out = [
-                (qid, id_map[int(d)], float(s), int(rk))
-                for qid, d, s, rk in zip(res["query_id"], res["docnum"], res["score"], res["rank"])
-            ]
-            return _with_every(self.spark.createDataFrame(
-                out, BATCH_RESULT_SCHEMA
-            ))
+            hits = list(zip(res["query_id"], res["docnum"], res["score"], res["rank"]))
+        else:
+            from pyspark.sql import Window
 
-        from pyspark.sql import Window
-
-        scored = scan.groupBy("chunk").applyInPandas(
-            batch_kernel, "query_id string, docnum long, score double"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docnum"))
-        top_rows = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= top_k)
-            .collect()
-        )
-        if not top_rows:
-            return _with_every(self.spark.createDataFrame(
-                [], BATCH_RESULT_SCHEMA
-            ))
-        ranked = self.spark.createDataFrame(
-            [(r["query_id"], int(r["docnum"]), float(r["score"]), int(r["rank"])) for r in top_rows],
-            "query_id string, docnum long, score double, rank int",
-        )
-        docnums = sorted({int(r["docnum"]) for r in top_rows})
-        pruned = self.docids.filter(F.col("docnum").isin(docnums))
-        return _with_every(
-            pruned.join(F.broadcast(ranked), "docnum", "inner")
-            .orderBy(F.asc("query_id"), F.asc("rank"))
-            .select("query_id", "doc_id", "score", "rank")
-        )
+            scored = scan.groupBy("chunk").applyInPandas(
+                batch_kernel, "query_id string, docnum long, score double"
+            )
+            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docnum"))
+            top_rows = (
+                scored.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= top_k)
+                .collect()
+            )
+            # the output contract: rows grouped by query_id, rank ascending
+            hits = sorted(
+                ((r["query_id"], r["docnum"], r["score"], r["rank"]) for r in top_rows),
+                key=lambda h: (h[0], h[3]),
+            )
+        return _with_every(self._ranked_frame(hits, BATCH_RESULT_SCHEMA, prefer_local))
 
     def _expand_term_range(
         self, lo: str | None, hi: str | None,
@@ -757,34 +745,16 @@ class BM25Index:
             per_epoch = pdf.groupby(["field", "term", "epoch"])["df"].first().reset_index()
             agg = per_epoch.groupby(["field", "term"])["df"].sum()
             df_override = {(f, t): int(v) for (f, t), v in agg.items()}
-        kernel = make_wand_kernel(
-            pq.terms, self.stats, top_k, pq.mode, df_override, pq.phrases,
-            fielded=pq.fielded, excluded=pq.excluded,
-            groups=pq.groups or None, excluded_phrases=pq.excluded_phrases or None,
-            deleted=self.deleted,
-            term_boosts=pq.boosts or None, maybe_terms=pq.maybe_terms or None,
-            filter_terms=pq.filter_terms or None, tree=pq.tree,
-            slop_phrases=pq.slop_phrases or None,
-            excluded_slop_phrases=pq.excluded_slop_phrases or None,
-        )
+        kernel = self._kernel(pq, top_k, df_override)
         outs = [kernel(grp.reset_index(drop=True)) for _, grp in pdf.groupby("chunk")]
         import pandas as pd
 
-        res = pd.concat(outs, ignore_index=True) if outs else None
-        if res is None or len(res) == 0:
+        if not outs:
             return self.empty_result()
+        res = pd.concat(outs, ignore_index=True)
         res = res.sort_values(["score", "docnum"], ascending=[False, True]).head(top_k)
-        docnums = [int(d) for d in res["docnum"]]
-        try:
-            id_map = self._docids_arrow(docnums)
-        except Exception:
-            id_rows = self.docids.filter(F.col("docnum").isin(docnums)).select("docnum", "doc_id").collect()
-            id_map = {r["docnum"]: r["doc_id"] for r in id_rows}
-        out = [
-            (id_map[int(d)], float(s), i + 1)
-            for i, (d, s) in enumerate(zip(res["docnum"], res["score"]))
-        ]
-        return self.spark.createDataFrame(out, RESULT_SCHEMA)
+        hits = [(d, s, i + 1) for i, (d, s) in enumerate(zip(res["docnum"], res["score"]))]
+        return self._ranked_frame(hits, RESULT_SCHEMA, local=True)
 
 
 def search_bm25(spark: SparkSession, index_dir: str, query: str, top_k: int = 10, mode: str = "and") -> DataFrame:

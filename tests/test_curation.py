@@ -352,6 +352,18 @@ def test_cc_nonconvergence_raises(spark):
         connected_components(df, max_iter=2).collect()
 
 
+def test_cc_unknown_algorithm_raises_on_local_path(spark):
+    """A misspelled algorithm raises on a pair set small enough for the
+    driver-local union-find, not only once the distributed path runs."""
+    import pytest as _pytest
+
+    from beetle_search_engine_spark.operators.dedup import connected_components
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with _pytest.raises(ValueError, match="unknown algorithm"):
+        connected_components(df, algorithm="typo")
+
+
 def test_cc_star_matches_label_propagation(spark):
     """Kiveris large-star/small-star returns identical components to
     min-label propagation on cliques, chains and reversed edges."""

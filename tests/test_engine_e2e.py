@@ -219,6 +219,37 @@ def test_resume_rebuilds_on_corpus_change(spark, built, tmp_path):
     assert m["groups_built"] == 2  # stale manifest ignored (fingerprint mismatch)
 
 
+def test_failed_tokenize_joins_docids_write(spark, tmp_path, monkeypatch):
+    """Fault injection: a tokenize stage whose write job fails must not
+    leak the docids write overlapped on a helper thread — the build
+    raises the tokenize error with no Spark job left running and the
+    helper pool shut down."""
+    import concurrent.futures as cf
+
+    from pyspark.sql import functions as F
+
+    from beetle_search_engine_spark.operators import build as B
+
+    pools = []
+
+    class RecordingPool(cf.ThreadPoolExecutor):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            pools.append(self)
+
+    def failing_tokenize(df, *a, **kw):
+        return df.select(F.raise_error(F.lit("injected tokenize failure")).alias("term"))
+
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(B, "tokenize", failing_tokenize)
+    corpus = generate_corpus(spark, 50, seed=9)
+    with pytest.raises(Exception, match="injected tokenize failure"):
+        build_index(spark, corpus, str(tmp_path / "idx"), fields=FIELDS, cfg=CFG)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert len(pools) == 1 and pools[0]._shutdown
+    assert not any(t.is_alive() for t in pools[0]._threads)
+
+
 def test_field_group_matches_distributed_spelling(spark, built):
     """field:(...) groups (round 5) are a textual distribution: results
     must be IDENTICAL to the hand-expanded spelling, whose paths are
